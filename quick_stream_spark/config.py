@@ -31,45 +31,41 @@ def _random_name(rng: random.Random | None = None) -> str:
 
 @dataclass
 class QuickStreamConfig:
-    """Mirrors the reference builder's 18 setters onto Spark options.
+    """Maps the reference builder's setters onto Spark options.
 
-    Mapping (reference field -> Spark concept):
-      max_con_count                  -> sink write parallelism (repartition /
-                                        JDBC ``numPartitions``); the elastic
-                                        pool itself (upsert.rs:382-452) is
-                                        subsumed by the Spark scheduler.
-      buffer_size                    -> source rate limit head-room; Spark's
-                                        micro-batch pull model provides the
-                                        backpressure the bounded channel gave.
-      single_digits / tens / hundreds-> accepted for parity, unused: Spark
-                                        plans set-oriented MERGE of any size,
-                                        so size-class statement pools
-                                        (builder/support.rs:161-232) vanish.
-      max_records_per_cycle_batch    -> ``maxFilesPerTrigger`` /
-                                        ``maxOffsetsPerTrigger``.
+    Mapping (field -> the Spark option it sets):
+      name                           -> ``queryName`` of the streaming query.
+      max_con_count                  -> :attr:`write_partitions`: the JDBC
+                                        sink's repartition and
+                                        ``numPartitions``, and the
+                                        multi-table router's concurrency cap.
+      buffer_size                    -> ``maxFilesPerTrigger`` via
+                                        :meth:`source_options` (the bounded
+                                        channel's backpressure analog).
       introduced_lag_in_millies ×
-      introduced_lag_cycles          -> trigger processing-time interval
-                                        (the lag-cycle accumulation loop,
-                                        upsert.rs:158-204).
-      connection_creation_threshold  -> subsumed by dynamic allocation / AQE.
-      print_connection_configuration -> listener verbosity (streaming.listener).
+      introduced_lag_cycles          -> ``trigger(processingTime=...)`` via
+                                        :meth:`trigger_kwargs` (the lag-cycle
+                                        accumulation loop, upsert.rs:158-204).
+      checkpoint_dir                 -> ``checkpointLocation`` (no reference
+                                        analog; a temp dir when unset).
+
+    Reference setters subsumed by the Spark runtime (no field here):
+    ``single_digits`` / ``tens`` / ``hundreds`` (size-class statement
+    pools, builder/support.rs:161-232 — Spark plans a set-oriented MERGE
+    of any size), ``max_records_per_cycle_batch`` (micro-batch sizing is
+    the source rate limit above), ``connection_creation_threshold`` (the
+    elastic pool, upsert.rs:382-452, is the Spark scheduler),
+    ``print_connection_configuration`` (status logging is a
+    ``StreamingQueryListener``: ``StatusListener(verbose=True)`` in
+    streaming.listener).
     """
 
     name: str = field(default_factory=_random_name)
     max_con_count: int = 10
     buffer_size: int = 10
-    single_digits: int = 2
-    tens: int = 2
-    hundreds: int = 1
-    max_records_per_cycle_batch: int = 10_000
     introduced_lag_in_millies: int = 1_000
     introduced_lag_cycles: int = 1
-    connection_creation_threshold: float = 25.0
-    print_connection_configuration: bool = False
-
-    # Spark-native knobs (no reference analog)
     checkpoint_dir: str | None = None
-    shuffle_partitions: int | None = None
 
     def validate(self) -> "QuickStreamConfig":
         if self.max_con_count < 1:

@@ -8,10 +8,11 @@ after any sequence of batches the table holds one row per key, carrying
 the values of that key's winning record; soft-deleted keys keep their row
 with ``row_active = false``.
 
-This module implements those semantics on a **bucket-partitioned parquet
-table** (Delta Lake is not available in this environment; the interface
-is the same MERGE contract, so a Delta/Iceberg backend can be swapped in
-behind ``KeyedTable`` unchanged).
+This module implements those semantics on ONE physical layout, a
+**bucket-partitioned parquet table**, under two commit protocols:
+``direct`` (in-place dynamic partition overwrite) and ``manifest``
+(append-only files published by an atomic snapshot manifest, see
+operators/commitlog.py).
 
 Scale design (100 TB posture):
   - The table is hash-bucketed on the key columns into ``num_buckets``
@@ -24,9 +25,9 @@ Scale design (100 TB posture):
     good target); at 100 TB use ~100k buckets so a micro-batch touches a
     small fraction.
   - The union+window merge shuffles once on the key columns.  Both sides
-    are already bucketed by key hash, so with a Delta/Iceberg backend or
-    bucketed catalog tables this becomes a co-located merge; on plain
-    parquet AQE coalesces the shuffle.
+    are already bucketed by key hash, so with bucketed catalog tables
+    this becomes a co-located merge; on plain parquet AQE coalesces the
+    shuffle.
   - No ``collect()`` of data — only the touched-bucket id list (bounded
     by ``num_buckets``, not by data volume) crosses to the driver.
 """
@@ -116,9 +117,8 @@ def compute_commit_meta(
     """Per-bucket ``[rows, active_rows]`` stats plus PER-FILE zone-map
     ``{col: [min, max]}`` bounds for a commit's freshly-written files,
     in ONE footer-weight aggregation whose result is bounded by the
-    commit's file count, never data volume.  Shared by the inline
-    manifest layout and ``LogStructuredBucketStore`` so both publish
-    identical metadata.
+    commit's file count, never data volume.  The manifest commit's
+    fallback when the write job's Observation cannot carry the stats.
 
     Returns ``(stats, zones)``: ``stats`` is ``None`` when the schema
     has no liveness column (honest scan fallback for ``count_fast``);
@@ -229,7 +229,6 @@ class KeyedTable:
         num_buckets: int = 16,
         soft_delete_col: str = "row_active",
         commit_protocol: str = "direct",
-        store=None,
         zone_map_cols: Sequence[str] | None = None,
         manifest_checkpoint_interval: int = 16,
         manifest_parquet_threshold: int = 50_000,
@@ -240,13 +239,6 @@ class KeyedTable:
             raise ValueError(
                 f"commit_protocol must be 'direct' or 'manifest', got {commit_protocol!r}"
             )
-        # pluggable physical storage (operators/backends.py BucketStore):
-        # None = the inline bucket-partitioned parquet layout.  The
-        # manifest commit protocol is part of the parquet layout, not of
-        # the merge contract, so the two don't compose.
-        if store is not None and commit_protocol != "direct":
-            raise ValueError("a custom store implies commit_protocol='direct'")
-        self._store = store
         self.spark = spark
         self.path = path
         self.keys = list(keys)
@@ -255,21 +247,6 @@ class KeyedTable:
         self.tie_break = tie_break
         self.num_buckets = int(num_buckets)
         self.soft_delete_col = soft_delete_col
-        # A stats-publishing store must count the SAME liveness column
-        # this table maintains — a silently different column would make
-        # count_fast(active_only=True) return wrong counts.  Stores
-        # default their column to None (= adopt ours here); an explicit
-        # mismatch is a construction-time error, not a wrong answer.
-        if store is not None and hasattr(store, "_soft_delete_col"):
-            if store._soft_delete_col is None:
-                store._soft_delete_col = soft_delete_col
-            elif store._soft_delete_col != soft_delete_col:
-                raise ValueError(
-                    f"store counts soft-delete column "
-                    f"{store._soft_delete_col!r} but this table maintains "
-                    f"{soft_delete_col!r}; per-bucket active-row stats "
-                    "would be computed on the wrong column"
-                )
         # zone maps: PER-FILE min/max for these columns ride every
         # snapshot commit (the Delta add-file data-skipping stats
         # analog); read_range() opens only the files whose bounds
@@ -278,15 +255,6 @@ class KeyedTable:
         # "rows modified since T" scan opens ONLY the files the
         # commits since T actually wrote, instead of the whole table.
         self.zone_map_cols = tuple(zone_map_cols) if zone_map_cols else ()
-        if store is not None and hasattr(store, "_zone_map_cols"):
-            if store._zone_map_cols is None:
-                store._zone_map_cols = self.zone_map_cols
-            elif tuple(store._zone_map_cols) != self.zone_map_cols:
-                raise ValueError(
-                    f"store tracks zone-map columns "
-                    f"{tuple(store._zone_map_cols)!r} but this table asked "
-                    f"for {self.zone_map_cols!r}"
-                )
         # Bucketing-properties guard: bucket = hash(keys) % num_buckets
         # is BAKED INTO the physical layout, so reopening an existing
         # table with different keys or bucket count silently corrupts
@@ -294,10 +262,8 @@ class KeyedTable:
         # second row — reproduced in tests/test_table_properties.py).
         # First write persists the properties next to the data; every
         # construction over an existing table validates against them.
-        # A custom store owns its own layout and is exempt.
         self._props_written = False
-        if store is None:
-            self._check_table_properties()
+        self._check_table_properties()
         # "direct" = in-place dynamic partition overwrite (fast, but a
         # crash mid-write can mix old and new buckets); "manifest" =
         # append-only data files published by an atomic snapshot
@@ -369,9 +335,7 @@ class KeyedTable:
     def exists(self) -> bool:
         if self._exists_cache:
             return True
-        if self._store is not None:
-            found = self._store.exists()
-        elif self._log is not None:
+        if self._log is not None:
             found = self._log.latest_version() is not None
         else:
             fs, p, _ = _hadoop_fs(self.spark, self.path)
@@ -404,22 +368,11 @@ class KeyedTable:
             return self._read_manifest(
                 active_only=active_only, with_bucket=with_bucket, version=version
             )
-        if version is not None and not self._store_time_travel():
+        if version is not None:
             raise ValueError(
-                "version time travel requires commit_protocol='manifest' "
-                "or a manifest-backed store"
+                "version time travel requires commit_protocol='manifest'"
             )
         schema = self._read_schema_sidecar()
-        if self._store is not None:
-            if version is not None:
-                df = self._store.read_version(schema, version)
-            else:
-                df = self._store.read(schema)
-            if active_only:
-                df = df.filter(F.col(self.soft_delete_col))
-            if not with_bucket:
-                df = df.drop(BUCKET_COL)
-            return df
         try:
             reader = self.spark.read
             if schema is not None:
@@ -511,18 +464,11 @@ class KeyedTable:
 
     def _read_snapshot(self, version: int, bucket_ids: list[int]) -> DataFrame:
         """A historical snapshot restricted to ``bucket_ids``, WITHOUT
-        the bucket column — the change-data read, routed to the inline
-        manifest io or the store's versioned reader."""
-        if self._log is not None:
-            sub = self._log.bucket_mapping_distributed(bucket_ids, version)
-            if sub is not None:  # bounded fetch on parquet checkpoints
-                return self._read_manifest(
-                    version=version, mapping_override=sub
-                )
-            return self._read_manifest(version=version, bucket_ids=bucket_ids)
-        return self._store.read_version(
-            self._read_schema_sidecar(), version, bucket_ids
-        ).drop(BUCKET_COL)
+        the bucket column — the change-data read."""
+        sub = self._log.bucket_mapping_distributed(bucket_ids, version)
+        if sub is not None:  # bounded fetch on parquet checkpoints
+            return self._read_manifest(version=version, mapping_override=sub)
+        return self._read_manifest(version=version, bucket_ids=bucket_ids)
 
     def _write_manifest_commit(
         self,
@@ -955,15 +901,10 @@ class KeyedTable:
             self.last_merge_stats = None
 
     def vacuum(self, keep_versions: int = 1) -> int:
-        """Reclaim unreferenced data files (manifest protocol or a
-        manifest-backed store)."""
-        log = self._snapshot_log()
-        if log is None:
-            raise ValueError(
-                "vacuum requires commit_protocol='manifest' or a "
-                "manifest-backed store"
-            )
-        return log.vacuum(keep_versions)
+        """Reclaim unreferenced data files (manifest protocol only)."""
+        if self._log is None:
+            raise ValueError("vacuum requires commit_protocol='manifest'")
+        return self._log.vacuum(keep_versions)
 
     def erase(self, deletes: DataFrame) -> int:
         """Compliance erasure (GDPR right-to-be-forgotten flow): hard-
@@ -976,10 +917,9 @@ class KeyedTable:
         hard_delete already rewrites the touched buckets in place, so
         erase degenerates to hard_delete (returns 0)."""
         self.hard_delete(deletes)
-        log = self._snapshot_log()
-        if log is None:
+        if self._log is None:
             return 0
-        return log.vacuum(keep_versions=1)
+        return self._log.vacuum(keep_versions=1)
 
     def history(self) -> DataFrame:
         """Per-commit audit log, oldest first — the Delta DESCRIBE
@@ -999,12 +939,9 @@ class KeyedTable:
         coverage is absent, never a guess.  Vacuumed versions drop
         out; the collapse retains the oldest kept commit's own op and
         timestamp."""
-        log = self._snapshot_log()
+        log = self._log
         if log is None:
-            raise ValueError(
-                "history requires commit_protocol='manifest' or a "
-                "manifest-backed store"
-            )
+            raise ValueError("history requires commit_protocol='manifest'")
         rows = [
             (
                 r["version"],
@@ -1037,12 +974,9 @@ class KeyedTable:
         copied or deleted (the republished files are still protected
         from vacuum because the newest manifest references them).
         Returns the new snapshot version."""
-        log = self._snapshot_log()
+        log = self._log
         if log is None:
-            raise ValueError(
-                "restore requires commit_protocol='manifest' or a "
-                "manifest-backed store"
-            )
+            raise ValueError("restore requires commit_protocol='manifest'")
         if hasattr(log, "restore_bounded"):
             # pointer-layout (big) tables: the restored checkpoint is
             # built distributedly from the target's own chain — the
@@ -1095,12 +1029,9 @@ class KeyedTable:
         skipped.  Rule of thumb: replicas hold versions and call
         read_changes; analytical consumers hold watermarks and call
         read_range."""
-        log = self._snapshot_log()
-        if log is None or (self._log is None and not self._store_time_travel()):
-            raise ValueError(
-                "read_changes requires commit_protocol='manifest' or a "
-                "manifest-backed store"
-            )
+        log = self._log
+        if log is None:
+            raise ValueError("read_changes requires commit_protocol='manifest'")
         map_from = log.read(from_version)
         map_to = log.read(to_version)
         changed = sorted(
@@ -1165,12 +1096,9 @@ class KeyedTable:
         version-based and value-based catch-up (see
         :meth:`read_changes`) compares this against
         ``skipping_stats({version_col: (T, None)})``."""
-        log = self._snapshot_log()
+        log = self._log
         if log is None:
-            raise ValueError(
-                "cdc_stats requires commit_protocol='manifest' or a "
-                "manifest-backed store"
-            )
+            raise ValueError("cdc_stats requires commit_protocol='manifest'")
         map_from = log.read(from_version)
         map_to = log.read(to_version)
         changed = {
@@ -1192,24 +1120,10 @@ class KeyedTable:
             "opened_fraction": round(opened / total, 6) if total else 0.0,
         }
 
-    def _snapshot_log(self):
-        """The table's snapshot log: the inline manifest in manifest
-        mode, or the one owned by a manifest-backed store (the logstore
-        backend); None for the direct parquet layout."""
-        return self._log or getattr(self._store, "_log", None)
-
-    def _store_time_travel(self):
-        """True when snapshot ops should route through the store's
-        versioned reader instead of the inline manifest io."""
-        return self._log is None and hasattr(self._store, "read_version")
-
     def snapshot_versions(self) -> list[int]:
-        log = self._snapshot_log()
+        log = self._log
         if log is None:
-            raise ValueError(
-                "snapshots require commit_protocol='manifest' or a "
-                "manifest-backed store"
-            )
+            raise ValueError("snapshots require commit_protocol='manifest'")
         return log.versions()
 
     def count_fast(self, active_only: bool = False, version: int | None = None) -> int:
@@ -1217,17 +1131,12 @@ class KeyedTable:
         METADATA only — no data file is opened, no job runs (the Delta
         'aggregate pushdown to stats' analog).  Every commit publishes
         per-bucket row counts atomically with its snapshot, so the
-        answer is exact for any retained ``version``.  Works in
-        manifest mode AND on a manifest-backed custom store (the
-        logstore backend publishes the same per-bucket stats).  Falls
+        answer is exact for any retained ``version``.  Falls
         back to a real scan only for a manifest written before stats
         existed."""
-        log = self._snapshot_log()
+        log = self._log
         if log is None:
-            raise ValueError(
-                "count_fast requires commit_protocol='manifest' or a "
-                "manifest-backed store"
-            )
+            raise ValueError("count_fast requires commit_protocol='manifest'")
         if version is None and log.latest_version() is None:
             # match read()'s behavior for a missing table instead of
             # reporting a nonexistent path as an empty (0-row) table
@@ -1300,7 +1209,7 @@ class KeyedTable:
         there), is always kept — skipping is strictly conservative."""
         from quick_stream_spark.operators.commitlog import zone_overlaps
 
-        log = self._snapshot_log()
+        log = self._log
         if log is None:
             return None
         enc = {
@@ -1403,16 +1312,10 @@ class KeyedTable:
         pm = self._pruned_mapping(ranges, version=version)
         if pm is None:
             df = self.read(active_only=active_only, version=version)
-        elif self._log is not None:
+        else:
             df = self._read_manifest(
                 active_only=active_only, version=version, mapping_override=pm
             )
-        else:  # manifest-backed store
-            df = self._store.read_mapping(
-                self._read_schema_sidecar(), pm
-            ).drop(BUCKET_COL)
-            if active_only:
-                df = df.filter(F.col(self.soft_delete_col))
         for col, (lo, hi) in ranges.items():
             if lo is not None:
                 df = df.filter(F.col(col) >= F.lit(lo))
@@ -1465,7 +1368,7 @@ class KeyedTable:
         liveness does not move physical bounds."""
         if fn not in ("min", "max"):
             raise ValueError(f"agg_fast supports 'min'/'max', got {fn!r}")
-        log = self._snapshot_log()
+        log = self._log
         idx = 0 if fn == "min" else 1
         # Distributed fast path (r11): parquet-checkpointed snapshots
         # answer from a Spark aggregation over the checkpoint rows +
@@ -1541,7 +1444,7 @@ class KeyedTable:
         applicable (no key component zone-mapped, no zones)."""
         if not any(k in self.zone_map_cols for k in self.keys):
             return None
-        log = self._snapshot_log()
+        log = self._log
         if log is None:
             return None
         # Distributed fast path (r11): parquet-checkpointed snapshots
@@ -1622,12 +1525,9 @@ class KeyedTable:
         0.0 when no zones are available (everything scans) — the
         operational signal that a table needs ``zone_map_cols`` or a
         clustered compaction."""
-        log = self._snapshot_log()
+        log = self._log
         if log is None:
-            raise ValueError(
-                "skipping_stats requires commit_protocol='manifest' or "
-                "a manifest-backed store"
-            )
+            raise ValueError("skipping_stats requires commit_protocol='manifest'")
         totals = None
         v = version if version is not None else log.latest_version()
         if v is not None and hasattr(log, "snapshot_totals"):
@@ -1673,13 +1573,10 @@ class KeyedTable:
         (the hash pruning already bounded the search to them) — the
         operational signal that an unsorted hot-lookup table needs
         ``key_bloom_bits`` or a clustered compaction."""
-        log = self._snapshot_log()
+        log = self._log
         if log is None:
-            raise ValueError(
-                "lookup_stats requires commit_protocol='manifest' or "
-                "a manifest-backed store"
-            )
-        pm, ids, _, _ = self._lookup_plan(key_values, version)
+            raise ValueError("lookup_stats requires commit_protocol='manifest'")
+        pm, ids, _ = self._lookup_plan(key_values, version)
         v = version if version is not None else log.latest_version()
         totals = log.snapshot_totals(v) if hasattr(log, "snapshot_totals") else None
         if totals is not None:
@@ -1712,13 +1609,12 @@ class KeyedTable:
         self, key_values: Sequence, version: int | None
     ) -> tuple:
         """Shared planning half of ``lookup()``/``lookup_stats()``:
-        ``(pruned_mapping_or_None, bucket_ids, key_df, schema)``.  One
-        bounded collect resolves each key's bucket id AND its bloom
-        hash (computed JVM-side so it matches the sidecar writer's bit
+        ``(pruned_mapping_or_None, bucket_ids, key_df)``.  One bounded
+        collect resolves each key's bucket id AND its bloom hash
+        (computed JVM-side so it matches the sidecar writer's bit
         positions exactly); zone pruning and bloom pruning compose.
-        The schema and key DataFrame return to the caller so
-        ``lookup()`` doesn't re-read the sidecar or rebuild the keys
-        (ADVICE r11: two extra driver round-trips on a
+        The key DataFrame returns to the caller so ``lookup()`` doesn't
+        rebuild the keys (ADVICE r11: an extra driver round-trip on a
         latency-sensitive path)."""
         from pyspark.sql.types import StructType
 
@@ -1760,7 +1656,7 @@ class KeyedTable:
                     pm = sub
             if pm is not None:
                 pm = self._bloom_prune(pm, key_hashes)
-        return pm, ids, kdf, schema
+        return pm, ids, kdf
 
     def lookup(
         self,
@@ -1771,11 +1667,11 @@ class KeyedTable:
         """Point reads: the current rows for the given keys, scanning
         ONLY their hash buckets — bucket = hash(keys) % N is the
         table's layout, so a lookup of k keys opens at most k buckets
-        out of ``num_buckets`` on every layout (manifest file-list
-        pruning, store versioned reads, or partition-dir pruning on
-        the direct layout).  ``key_values``: scalars for single-key
-        tables, or tuples in ``self.keys`` order.  Only the bounded
-        key list and its bucket ids cross the driver — never data.
+        out of ``num_buckets`` under either protocol (manifest file-list
+        pruning, or partition-dir pruning on the direct layout).
+        ``key_values``: scalars for single-key tables, or tuples in
+        ``self.keys`` order.  Only the bounded key list and its bucket
+        ids cross the driver — never data.
 
         When key columns are zone-mapped, file-grain zone pruning
         COMPOSES with the hash pruning: inside each key's bucket only
@@ -1789,15 +1685,11 @@ class KeyedTable:
         UNSORTED case too: inside the key's bucket, rolled files whose
         bloom excludes every requested key never open.  Conservative
         as always: files without bounds or sidecars stay."""
-        pm, ids, kdf, schema = self._lookup_plan(key_values, version)
+        pm, ids, kdf = self._lookup_plan(key_values, version)
         if pm is not None and self._log is not None:
             df = self._read_manifest(
                 active_only=active_only, version=version, mapping_override=pm
             )
-        elif pm is not None:  # manifest-backed store
-            df = self._store.read_mapping(schema, pm).drop(BUCKET_COL)
-            if active_only:
-                df = df.filter(F.col(self.soft_delete_col))
         elif self._log is not None:
             v = version if version is not None else self._log.latest_version()
             sub = (
@@ -1815,17 +1707,10 @@ class KeyedTable:
                 df = self._read_manifest(
                     active_only=active_only, version=version, bucket_ids=ids
                 )
-        elif self._store_time_travel():
-            df = self._store.read_version(
-                schema, version, ids
-            ).drop(BUCKET_COL)
-            if active_only:
-                df = df.filter(F.col(self.soft_delete_col))
         else:
             if version is not None:
                 raise ValueError(
-                    "version time travel requires commit_protocol="
-                    "'manifest' or a manifest-backed store"
+                    "version time travel requires commit_protocol='manifest'"
                 )
             df = (
                 self.read(active_only=active_only, with_bucket=True)
@@ -1857,13 +1742,9 @@ class KeyedTable:
         cycle's statements).  The recovery story here is the streaming
         checkpoint: foreachBatch re-delivers the interrupted batch and
         the merge is idempotent under ``newer_wins``; for stronger
-        guarantees swap the backend for Delta/Iceberg behind this same
-        interface (their commit protocol makes the overwrite atomic)."""
-        if self._store is not None:
-            self._store.write(df, mode)
-            self._exists_cache = True
-            self._write_schema_sidecar(df.schema)
-            return
+        guarantees use ``commit_protocol="manifest"``, whose append-only
+        files and atomic snapshot publish make every commit
+        all-or-nothing (:meth:`_write_manifest_commit`)."""
         if repartition:
             df = df.repartition(F.col(BUCKET_COL))
         writer = df.write.mode(mode).option("partitionOverwriteMode", "dynamic")
@@ -1926,10 +1807,9 @@ class KeyedTable:
                 "or resize explicitly with rebucket()"
             )
         # zone_map_cols is PERSISTED and adopted-or-validated on open
-        # (ADVICE r9, mirroring the LogStructuredBucketStore contract):
-        # a second handle opened without it would otherwise publish its
-        # next commit with zones=None, silently dropping data-skipping
-        # coverage table-wide.
+        # (ADVICE r9): a second handle opened without it would otherwise
+        # publish its next commit with zones=None, silently dropping
+        # data-skipping coverage table-wide.
         recorded = props.get("zone_map_cols")
         if recorded is None:
             # pre-r10 sidecar: refresh it at the next write
@@ -1961,7 +1841,6 @@ class KeyedTable:
         protocol the switch is a single atomic snapshot.  Properties
         sidecar is updated so subsequent opens validate against the new
         count."""
-        self._require_parquet_layout("rebucket")
         new_n = int(new_num_buckets)
         if new_n < 1:
             raise ValueError("new_num_buckets must be >= 1")
@@ -2002,10 +1881,6 @@ class KeyedTable:
     def _write_schema_sidecar(self, schema) -> None:
         if self._schema_cache is not None and self._schema_cache.json() == schema.json():
             return  # unchanged since we last wrote it — skip the FS round-trip
-        if self._store is not None:
-            self._store.write_schema(schema)
-            self._schema_cache = schema
-            return
         fs, _, jvm = _hadoop_fs(self.spark, self.path)
         p = jvm.org.apache.hadoop.fs.Path(os.path.join(self.path, self._SCHEMA_SIDECAR))
         out = fs.create(p, True)
@@ -2020,9 +1895,6 @@ class KeyedTable:
         from pyspark.sql.types import StructType
 
         if self._schema_cache is not None:
-            return self._schema_cache
-        if self._store is not None:
-            self._schema_cache = self._store.read_schema()
             return self._schema_cache
         fs, _, jvm = _hadoop_fs(self.spark, self.path)
         p = jvm.org.apache.hadoop.fs.Path(os.path.join(self.path, self._SCHEMA_SIDECAR))
@@ -2042,9 +1914,6 @@ class KeyedTable:
     def _drop_bucket_dirs(self, bucket_ids: list[int]) -> None:
         """Remove partition directories that became empty (dynamic
         overwrite only replaces partitions present in the written data)."""
-        if self._store is not None:
-            self._store.drop_buckets(bucket_ids)
-            return
         fs, _, jvm = _hadoop_fs(self.spark, self.path)
         for b in bucket_ids:
             p = jvm.org.apache.hadoop.fs.Path(os.path.join(self.path, f"{BUCKET_COL}={b}"))
@@ -2243,25 +2112,10 @@ class KeyedTable:
         finally:
             up.unpersist()
 
-    def _require_parquet_layout(self, op: str) -> None:
-        """Layout-maintenance ops (compact/file_count) manage the
-        inline bucket-partitioned parquet directory; a custom
-        ``BucketStore`` owns its own physical layout, so these ops
-        have nothing to act on — fail with a contract error instead
-        of an opaque JVM path error on the never-created self.path."""
-        if self._store is not None:
-            raise ValueError(
-                f"{op}() is a parquet-layout maintenance op and does not "
-                "apply to a KeyedTable with a custom store= backend; "
-                "physical layout (file counts, compaction) is the "
-                "BucketStore implementation's responsibility"
-            )
-
     def total_bytes(self) -> int:
         """On-disk bytes of the table's live data files (manifest mode:
         only files referenced by the current snapshot).  Metadata-only:
         one FS listing (or manifest resolve + getFileStatus)."""
-        self._require_parquet_layout("total_bytes")
         if not self.exists():
             return 0
         fs, root, jvm = _hadoop_fs(self.spark, self.path)
@@ -2299,7 +2153,6 @@ class KeyedTable:
         target, via one :meth:`rebucket` rewrite.  The check is
         metadata-only; call it from the same maintenance cadence as
         :meth:`maybe_compact`.  Returns whether a resize ran."""
-        self._require_parquet_layout("maybe_rebucket")
         if not self.exists():
             return False
         total = self.total_bytes()
@@ -2411,7 +2264,6 @@ class KeyedTable:
         fine-grained ORTHOGONAL dimensions, where a hierarchical sort
         leaves the secondary bounds near-full-range (both layouts
         measured side by side in tests/test_zone_maps.py)."""
-        self._require_parquet_layout("compact")
         if method not in ("hierarchical", "zorder"):
             raise ValueError(
                 f"method must be 'hierarchical' or 'zorder', got {method!r}"
@@ -2510,7 +2362,6 @@ class KeyedTable:
         bucket otherwise.  ``sort_by`` forwards to :meth:`compact` —
         a long-lived streaming table then periodically re-clusters
         into range-sliced files and keeps its zone maps sharp."""
-        self._require_parquet_layout("maybe_compact")
         if not self.exists():
             return False
         if self._log is not None:
@@ -2545,7 +2396,6 @@ class KeyedTable:
 
     def file_count(self) -> int:
         """Parquet data files currently in the table (all buckets)."""
-        self._require_parquet_layout("file_count")
         if self._log is not None:
             return sum(len(fl) for fl in self._log.read().values())
         fs, root, jvm = _hadoop_fs(self.spark, self.path)

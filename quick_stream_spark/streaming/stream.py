@@ -237,13 +237,6 @@ class UpsertQuickStream(_StreamBase):
         self.quarantine = quarantine
         if auto_compact_every is not None and auto_compact_every < 1:
             raise ValueError("auto_compact_every must be >= 1")
-        if auto_compact_every is not None and getattr(target, "_store", None) is not None:
-            # surface the layout/store contract mismatch at build time,
-            # not as a mid-stream failure inside foreachBatch
-            raise ValueError(
-                "auto_compact_every requires the inline parquet layout; "
-                "a custom store= backend owns its own compaction"
-            )
         if auto_rebucket_target_bytes is not None and auto_compact_every is None:
             raise ValueError(
                 "auto_rebucket_target_bytes rides the auto_compact_every "

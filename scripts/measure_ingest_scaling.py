@@ -1,9 +1,11 @@
 """Ingestion-parallelism demonstration (r14 verdict ask #5): at sf0.1
 the three ingestion legs' 8->32-core scaling ratios sit at ~1.0 because
 per-trigger/per-commit fixed machinery dominates — this measures the
-same three legs at ~10x the sf0.1 events volume (sf1-equivalent,
+same three legs at 50x the sf0.1 events volume (sf5-equivalent,
 replicated with offset key/arrival spaces so key count scales with
 volume) so the data plane is large enough for core count to matter.
+50x is the recorded protocol (plans/r15/ingest_scaling_*.jsonl);
+``QSS_SCALE_REPLICAS`` overrides it for a quicker pass.
 
 One invocation = one core count (Spark cannot re-master a live JVM):
 
@@ -14,6 +16,7 @@ Each prints ONE JSON line with per-leg walls; the 8-vs-32 ratio per leg
 is computed offline.  The replicated input is WRITTEN ONCE to a shared
 parquet dir (same files for both runs — fairness), and each leg gets an
 untimed 1x warmup so JIT/Arrow/merge code paths are off the timed leg.
+Every leg run works in its own temp dir, removed when the run ends.
 
 Legs (mirroring the benched queries' operator compositions exactly):
   batch_direct   — r_upsert_endstate:        2 merges, direct layout
@@ -27,6 +30,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
 import tempfile
 import time
@@ -39,7 +43,7 @@ from bench import build_session  # noqa: E402
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    repl = int(os.environ.get("QSS_SCALE_REPLICAS", "10"))
+    repl = int(os.environ.get("QSS_SCALE_REPLICAS", "50"))
     input_dir = os.environ.get(
         "QSS_SCALE_INPUT", f"/tmp/qss_scale_events_x{repl}"
     )
@@ -62,7 +66,7 @@ def main() -> None:
 
     ev1 = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
 
-    # Deterministic 10x replication, materialized ONCE and shared by
+    # Deterministic replication, materialized ONCE and shared by
     # every run (8 and 32 cores read the identical files).
     marker = os.path.join(input_dir, "_SUCCESS")
     if not os.path.exists(marker):
@@ -97,10 +101,10 @@ def main() -> None:
         ).collect()
         probe_best = min(probe_best, time.monotonic() - t0)
 
-    def table(**kw) -> KeyedTable:
+    def table(work, **kw) -> KeyedTable:
         return KeyedTable(
             spark,
-            tempfile.mkdtemp(prefix="qss-scale-") + "/t",
+            work + "/t",
             keys=("user_id",),
             version_col="ts",
             arrival_col="event_id",
@@ -108,14 +112,15 @@ def main() -> None:
             **kw,
         )
 
-    def batch_direct(src) -> int:
-        t = table()
+    def batch_direct(src, work) -> int:
+        t = table(work)
         t.upsert(src.filter(F.col("event_id") % 2 == 0))
         t.upsert(src.filter(F.col("event_id") % 2 == 1))
         return t.read(active_only=True).count()
 
-    def batch_pointer(src) -> int:
+    def batch_pointer(src, work) -> int:
         t = table(
+            work,
             commit_protocol="manifest",
             manifest_checkpoint_interval=3,
             manifest_parquet_threshold=0,
@@ -124,10 +129,9 @@ def main() -> None:
             t.upsert(src.filter(F.col("event_id") % 4 == b))
         return t.read(active_only=True).count()
 
-    def stream_direct(src) -> int:
-        work = tempfile.mkdtemp(prefix="qss-scale-stream-")
+    def stream_direct(src, work) -> int:
         write_split_as_files(src, F.col("event_id") % 4, 4, work + "/in")
-        t = table()
+        t = table(work)
         stream = stream_parquet_dir(
             spark, work + "/in", src.schema, max_files_per_trigger=2
         )
@@ -149,17 +153,25 @@ def main() -> None:
         with open("/proc/loadavg") as fh:
             return float(fh.read().split()[0])
 
+    def run_leg(fn, src) -> tuple[int, float]:
+        """(end rows, wall seconds); the clean-up is outside the clock."""
+        work = tempfile.mkdtemp(prefix="qss-scale-")
+        try:
+            t0 = time.monotonic()
+            end_rows = fn(src, work)
+            return end_rows, time.monotonic() - t0
+        finally:
+            shutil.rmtree(work, ignore_errors=True)
+
     results = {}
     for name, fn in legs.items():
         # untimed 1x warmup: JIT/Arrow/merge paths + page cache for the
-        # small source; the timed leg then measures the 10x data plane
+        # small source; the timed leg then measures the replicated plane
         with scoped_shuffle(spark, rows_sized_parts(n_rows // repl, 100_000)):
-            fn(ev1)
+            run_leg(fn, ev1)
         load_before = loadavg()
         with scoped_shuffle(spark, rows_sized_parts(n_rows, 100_000)):
-            t0 = time.monotonic()
-            end_rows = fn(ev)
-            wall = time.monotonic() - t0
+            end_rows, wall = run_leg(fn, ev)
         results[name] = {
             "wall_sec": round(wall, 3),
             "end_rows": end_rows,

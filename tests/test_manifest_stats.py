@@ -136,131 +136,55 @@ def test_count_fast_missing_table_raises_like_read(spark, tmp_table_dir):
         t.count_fast()
 
 
-def test_count_fast_on_logstore_backend(spark, tmp_table_dir):
-    """r8: the logstore BucketStore publishes the same per-bucket
-    [rows, active_rows] stats with every commit, so count_fast answers
-    from pure manifest metadata on the store backend too — including
-    after soft deletes (active counts) and hard deletes (dropped
-    buckets leave the stats)."""
-    from quick_stream_spark.operators.backends import LogStructuredBucketStore
-
-    t = KeyedTable(
-        spark,
-        os.path.join(tmp_table_dir, "t-ls"),
-        keys=("pkey",),
-        version_col="modified_date",
-        arrival_col="arrival",
-        num_buckets=4,
-        store=LogStructuredBucketStore(
-            spark, os.path.join(tmp_table_dir, "t-ls")
-        ),
-    )
-    t.upsert(df(spark, B1))
-    assert t.count_fast() == t.read().count()
-    assert t.count_fast(active_only=True) == t.read().count()
-
-    # soft delete one key: total count unchanged, active count drops
-    one = df(spark, B1[:1])
-    t.soft_delete(one)
-    assert t.count_fast() == t.read().count()
-    assert (
-        t.count_fast(active_only=True)
-        == t.read(active_only=True).count()
-        == t.read().count() - 1
-    )
-
-    # hard delete: rows leave both the table and the metadata counts
-    t.hard_delete(one)
-    assert t.count_fast() == t.read().count()
-
-    # a fresh handle reads the same metadata
-    t2 = KeyedTable(
-        spark,
-        os.path.join(tmp_table_dir, "t-ls"),
-        keys=("pkey",),
-        version_col="modified_date",
-        arrival_col="arrival",
-        num_buckets=4,
-        store=LogStructuredBucketStore(
-            spark, os.path.join(tmp_table_dir, "t-ls")
-        ),
-    )
-    assert t2.count_fast() == t.read().count()
-
-
-def test_store_soft_delete_col_adopted_and_mismatch_rejected(
-    spark, tmp_table_dir
-):
-    """ADVICE r8: a store's stats pass must count the SAME liveness
-    column the owning table maintains.  The store defaults its column
-    to None and adopts the table's at attach time; an explicit mismatch
-    is a construction-time ValueError, never a wrong count_fast."""
-    from quick_stream_spark.operators.backends import LogStructuredBucketStore
-
-    store = LogStructuredBucketStore(spark, os.path.join(tmp_table_dir, "a"))
-    assert store._soft_delete_col is None
-    t = KeyedTable(
-        spark,
-        os.path.join(tmp_table_dir, "a"),
-        keys=("pkey",),
-        version_col="modified_date",
-        arrival_col="arrival",
-        num_buckets=4,
-        soft_delete_col="is_live",
-        store=store,
-    )
-    assert store._soft_delete_col == "is_live"
-    t.upsert(df(spark, B1))
-    assert t.count_fast(active_only=True) == t.read().count() == 10
-
-    with pytest.raises(ValueError, match="soft-delete column"):
-        KeyedTable(
-            spark,
-            os.path.join(tmp_table_dir, "b"),
-            keys=("pkey",),
-            soft_delete_col="is_live",
-            store=LogStructuredBucketStore(
-                spark,
-                os.path.join(tmp_table_dir, "b"),
-                soft_delete_col="row_active",
-            ),
-        )
-
-
 def test_all_null_liveness_does_not_crash_the_stats_commit(
     spark, tmp_table_dir
 ):
     """ADVICE r8: F.sum over an all-NULL liveness column returns NULL;
-    int(None) crashed the commit mid-write.  Both stats passes (the
-    store's _next_stats and the inline _write_manifest_commit) must
-    coalesce to 0 — NULL liveness means not-active, and the commit
-    lands."""
+    int(None) crashed the commit mid-write.  Both manifest stats passes
+    (the write job's Observation and the ``compute_commit_meta``
+    footer aggregation it falls back to) must coalesce to 0 — NULL
+    liveness means not-active, and the commit lands."""
     from pyspark.sql import functions as F
 
-    from quick_stream_spark.operators.backends import LogStructuredBucketStore
-    from quick_stream_spark.operators.merge import BUCKET_COL
+    from quick_stream_spark.operators.merge import BUCKET_COL, compute_commit_meta
 
-    # store path: write a bucket whose liveness is NULL for every row
-    store = LogStructuredBucketStore(
-        spark, os.path.join(tmp_table_dir, "s"), soft_delete_col="row_active"
-    )
+    # compute_commit_meta directly: a commit dir whose bucket has only
+    # NULL liveness
     frame = spark.createDataFrame(
         [(1, None), (2, None)], "pkey long, row_active boolean"
     ).withColumn(BUCKET_COL, F.lit(0))
-    store.write(frame, "overwrite")  # TypeError before the coalesce fix
-    stats = store._log.read_stats(store._log.latest_version())
-    assert stats == {0: [2, 0]}
+    commit_dir = os.path.join(tmp_table_dir, "commit")
+    frame.write.parquet(commit_dir)
+    stats, zones = compute_commit_meta(  # TypeError before the coalesce fix
+        spark, commit_dir, frame.schema, BUCKET_COL, "row_active", ()
+    )
+    assert stats == {0: [2, 0]} and zones == {}
 
-    # inline manifest path: an update batch carrying explicit NULLs
-    t = mk(spark, tmp_table_dir, name="m", protocol="manifest")
+    # an update batch carrying explicit NULLs, once through the
+    # Observation path and once through the footer fallback (a
+    # zone-map column forces it)
     rows = [(i, datetime(2024, 1, 1), i, f"p{i}") for i in range(4)]
     null_live = df(spark, rows).withColumn(
         "row_active", F.lit(None).cast("boolean")
     )
-    t.upsert(null_live)
-    assert t.count_fast() == 4
-    assert t.count_fast(active_only=True) == 0
-    assert t.read(active_only=True).count() == 0
+    for name, zone_map_cols in (("obs", None), ("footer", ("modified_date",))):
+        t = KeyedTable(
+            spark,
+            os.path.join(tmp_table_dir, name),
+            keys=("pkey",),
+            version_col="modified_date",
+            arrival_col="arrival",
+            num_buckets=4,
+            commit_protocol="manifest",
+            zone_map_cols=zone_map_cols,
+        )
+        t.upsert(null_live)
+        stats = t._log.read_stats()  # published stats, not a scan fallback
+        assert sum(r for r, _ in stats.values()) == 4
+        assert all(a == 0 for _, a in stats.values())
+        assert t.count_fast() == 4
+        assert t.count_fast(active_only=True) == 0
+        assert t.read(active_only=True).count() == 0
 
 
 def test_commit_meta_is_free_when_nothing_is_tracked():
